@@ -3082,15 +3082,13 @@ def _q_msgpack_roundtrip(spark, sf_dir):
 
 
 def _q_msgpack_wire_jvm(spark, sf_dir):
-    """The msgpack ENCODE hot path with zero Python in the plan
-    (functions/wire_expr.py): every byte of the reference chunk entry
-    built from Catalyst expressions inside whole-stage codegen —
-    production sinks only serialize, so this lifts the row-at-a-time
-    Python bound the r3/r4 verdicts carried for the codec family.
-    Byte-for-byte equality with the Python packer is pinned in
-    tests/test_wireformat.py; here the oracle re-derives the exact
-    per-row wire size from the spec's closed-form header/length
-    arithmetic."""
+    """The msgpack chunk entry encoded with zero Python in the plan
+    (functions/wire_expr.py): every byte built from Catalyst
+    expressions inside whole-stage codegen — the event encoder the
+    Forward framing runs on.  Byte-for-byte equality with the Python
+    packer is pinned in tests/test_wireformat.py; here the oracle
+    re-derives the exact per-row wire size from the spec's
+    closed-form header/length arithmetic."""
     from fluent_bit_spark.functions.wire_expr import turn_event_bytes
 
     t = _transcripts(spark, sf_dir)
@@ -3100,31 +3098,29 @@ def _q_msgpack_wire_jvm(spark, sf_dir):
 
 
 def _q_avro_wire_jvm(spark, sf_dir):
-    """Avro binary ENCODE with zero Python in the plan
-    (functions/wire_expr.py): zigzag base-128 varints, length-prefixed
-    utf8, and the nullable-union index built from Catalyst bit-ops
-    inside whole-stage codegen — the src/flb_avro.c output path at
-    codegen speed.  Byte equality with the Python encoder is
-    property-pinned in tests/test_wireformat.py; the oracle re-derives
-    the exact per-row wire size from the varint closed form."""
-    from fluent_bit_spark.functions.wire_expr import avro_turn_bytes
-
-    t = _transcripts(spark, sf_dir)
-    return avro_turn_bytes(
-        t.withColumn("ts", F.col("ts").cast("timestamp"))
-    ).select("conv_id", "turn_idx", "n_bytes")
+    """Per-row Avro wire size (src/flb_avro.c output path) from the one
+    Avro encoder, the Python codec of avro_roundtrip: this query is
+    its (conv_id, turn_idx, n_bytes) projection.  A Catalyst Avro
+    encoder exceeded the 64 KB generated-method limit and ran
+    interpreted, slower than the Python codec, so none is kept.  The
+    oracle re-derives the exact per-row wire size from the varint
+    closed form."""
+    return _q_avro_roundtrip(spark, sf_dir).select(
+        "conv_id", "turn_idx", "n_bytes"
+    )
 
 
 def _q_forward_wire_jvm(spark, sf_dir):
     """Forward-mode message framing (out_forward's native send shape,
     plugins/in_forward/fw_prot.c) with zero Python in the plan
-    (functions/wire_expr.forward_message_bytes): per-row event bytes
-    from the Catalyst msgpack encoder, conversation-bounded (tag,
-    conv_id) groups ordered by sort_array and concatenated with a
-    binary aggregate().  Byte-identity with wire.pack_forward_message
-    is corpus-pinned in tests/test_wireformat.py; the oracle
-    re-derives exact per-message wire sizes (full-generality tag and
-    array headers)."""
+    (functions/wire_expr.forward_message_bytes, the encoder
+    forward_roundtrip decodes): per-row event bytes from the Catalyst
+    msgpack encoder, conversation-bounded (tag, conv_id) groups
+    ordered by (turn_idx, ts) with sort_array and joined in one
+    linear pass.  Byte-identity with wire.pack_forward_message is
+    corpus-pinned in tests/test_wireformat.py; the oracle re-derives
+    exact per-message wire sizes (full-generality tag and array
+    headers)."""
     from fluent_bit_spark.functions.wire_expr import forward_message_bytes
 
     r = _routed(spark, sf_dir).withColumn("ts", F.col("ts").cast("timestamp"))
@@ -3239,10 +3235,11 @@ def _q_streaming_backpressure(spark, sf_dir):
 
 def _q_forward_roundtrip(spark, sf_dir):
     """Forward-protocol framing under the gate: the routed stream is
-    packed into per-(tag, conv) Forward-mode messages ([tag,
-    [[EventTime, record], ...]] — plugins/in_forward/fw_prot.c) and
-    unpacked back; fields, per-message event counts, AND exact
-    message wire sizes are all oracle-checked."""
+    packed JVM-side into per-(tag, conv) Forward-mode messages ([tag,
+    [[EventTime, record], ...]] — plugins/in_forward/fw_prot.c), by
+    the same encoder as forward_wire_jvm, and unpacked back in
+    Python; fields, per-message event counts, AND exact message wire
+    sizes are all oracle-checked."""
     from fluent_bit_spark.operators.wireformat import forward_roundtrip
 
     return forward_roundtrip(_routed(spark, sf_dir))
@@ -3512,7 +3509,7 @@ def _q_http_chunked(spark, sf_dir):
     the closed-form oracle (hex header widths included)."""
     from fluent_bit_spark.operators.wireformat import http_chunked_roundtrip
 
-    return http_chunked_roundtrip(_transcripts(spark, sf_dir), chunk_size=48)
+    return http_chunked_roundtrip(_transcripts(spark, sf_dir))
 
 
 def _q_metrics_endpoint(spark, sf_dir):
@@ -4068,7 +4065,7 @@ _GATE_PRIORITY_NEXT: list = [
 # test_gate_tail_has_driver_green_representative) until a future
 # window can gate them.
 _GATE_LOCAL_TAIL: list = [
-    # late-r5: whole-stage-codegen wire encoders (family
+    # late-r5: per-row / per-message wire-size queries (family
     # representatives: msgpack_roundtrip / avro_roundtrip, both
     # driver-green r4)
     "msgpack_wire_jvm",

@@ -278,8 +278,10 @@ def bench_queries(spark, source):
 
     def msgpack_pack_jvm_bench():
         # the same serialize path with ZERO Python: whole-stage-codegen
-        # byte assembly (functions/wire_expr.py) — the production-sink
-        # encode shape; byte-equality with the Python packer is
+        # byte assembly (functions/wire_expr.py) — the event encoder
+        # under forward_roundtrip; msgpack_roundtrip keeps its Python
+        # packer, which measured faster than this encoder feeding a
+        # Python decode; byte-equality with the Python packer is
         # pytest-pinned
         from fluent_bit_spark.functions.wire_expr import turn_event_bytes
 

@@ -763,6 +763,10 @@ def unpack_collectd(buf: bytes) -> dict:
 
 # ------------------------------------------------- HTTP chunked coding
 
+# chunk size of the transcript framing (operators/wireformat and
+# functions/wire_expr http_chunked_* operators)
+HTTP_CHUNK_SIZE = 48
+
 
 def http_chunked_encode(payload: bytes, chunk_size: int) -> bytes:
     """HTTP/1.1 chunked transfer encoding: `<hex size>\\r\\n<bytes>

@@ -13,27 +13,56 @@ a broken-but-symmetric codec would pass) but that the byte-level
 encoding choices (fixstr vs str8 headers, canonical smallest ints,
 zigzag varint widths) match the closed-form sizes the spec dictates.
 
-Scale shape: a codec is inherently per-record work; `mapInPandas`
-keeps it Arrow-batched (one Python crossing per batch, like the
-murmur3 path in functions/hashing.py), embarrassingly parallel, and
-shuffle-free — the 100 TB cost is one map pass.
+One encoder per format: `forward_roundtrip` packs with the Catalyst
+encoder (functions/wire_expr.forward_message_bytes) and runs Python
+only to decode; every other format packs in Python, which measured
+faster than a JVM encode feeding a Python decode.
+
+Scale shape: a codec is inherently per-record work; `_map_rows` keeps
+it Arrow-batched (one Python crossing per batch, columns read whole),
+embarrassingly parallel, and shuffle-free — the 100 TB cost is one map
+pass.  The conversation-bounded envelopes (Kafka, TD) group on conv_id
+through `_per_conversation`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+import gzip
+from collections.abc import Callable, Iterable
+from itertools import chain
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from fluent_bit_spark.functions.wire import (
+    DS_GAUGE,
+    HTTP_CHUNK_SIZE,
     avro_decode,
     avro_encode,
-    pack_event,
+    http_chunked_decode,
+    http_chunked_encode,
+    msgpack_unpack,
+    pack_collectd,
+    pack_kafka_batch,
+    pack_kafka_produce_request,
+    pack_mqtt_publish,
+    pack_td_record,
     pack_turn_event,
+    pack_ws_frame,
+    unpack_collectd,
     unpack_event,
+    unpack_forward_message,
+    unpack_kafka_batch,
+    unpack_kafka_produce_request,
+    unpack_mqtt_publish,
     unpack_turn_event,
+    unpack_ws_frame,
 )
+from fluent_bit_spark.functions.wire_expr import forward_message_bytes
+
+# the transcript columns every codec reads, in row-function order;
+# `ts` reaches the row functions as µs-epoch ints
+_TURN_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 _OUT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -50,8 +79,64 @@ AVRO_TRANSCRIPT_SCHEMA = [
 ]
 
 
-def _ts_to_us(ts) -> int:
-    return ts.value // 1000  # pandas ns -> µs
+def _columns(pdf: pd.DataFrame) -> list[list]:
+    """The batch as one Python list per column: timestamps become
+    µs-epoch ints, and pandas' NaN/NaT nulls become None."""
+    out = []
+    for _, s in pdf.items():
+        if s.dtype.kind == "M":
+            # to_numpy pins the ns unit; Series.astype would silently
+            # reinterpret a datetime64[us]-backed column as µs ints
+            vals = (
+                s.to_numpy(dtype="datetime64[ns]").astype("int64") // 1_000
+            ).tolist()
+        else:
+            vals = s.tolist()
+        na = s.isna()
+        if na.any():
+            vals = [None if n else v for v, n in zip(vals, na.tolist())]
+        out.append(vals)
+    return out
+
+
+def _frame(rows: list, schema: str) -> pd.DataFrame:
+    """Output rows as a pandas frame named after the DDL `schema`;
+    timestamp fields are built from µs-epoch ints."""
+    fields = [f.split() for f in schema.split(",")]
+    frame = pd.DataFrame(rows, columns=[name for name, _ in fields])
+    for name, typ in fields:
+        if typ == "timestamp":
+            frame[name] = pd.to_datetime(frame[name], unit="us")
+    return frame
+
+
+def _map_rows(
+    df: DataFrame, schema: str, row: Callable, flat: bool = False
+) -> DataFrame:
+    """Arrow-batched per-row codec stage: `row(*values)` runs once per
+    row of `df` (values in `df`'s column order, read by `_columns`) and
+    returns one output row of `schema` — or, with `flat`, a list of
+    them."""
+
+    def fn(pdfs: Iterable[pd.DataFrame]):
+        for pdf in pdfs:
+            out = map(row, *_columns(pdf))
+            if flat:
+                out = chain.from_iterable(out)
+            yield _frame(list(out), schema)
+
+    return df.mapInPandas(fn, schema)
+
+
+def _per_conversation(df: DataFrame, schema: str, group: Callable) -> DataFrame:
+    """One output row of `schema` per conversation: `group(rows)` gets
+    the conversation's `_TURN_COLS` tuples in turn_idx order."""
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = sorted(zip(*_columns(pdf)), key=lambda r: r[1])
+        return _frame([group(rows)], schema)
+
+    return df.select(*_TURN_COLS).groupBy("conv_id").applyInPandas(fn, schema)
 
 
 def msgpack_roundtrip(df: DataFrame) -> DataFrame:
@@ -59,101 +144,30 @@ def msgpack_roundtrip(df: DataFrame) -> DataFrame:
     (+ exact wire size). EventTime carries (sec, nsec); µs precision
     survives the nsec field exactly."""
 
-    def fn(pdfs: Iterable[pd.DataFrame]):
-        for pdf in pdfs:
-            # vectorized EventTime split: ns epoch -> (sec, nsec@µs grain)
-            # (to_numpy pins the ns unit; Series.astype would silently
-            # reinterpret a datetime64[us]-backed column as µs ints)
-            us = (
-                pdf["ts"].to_numpy(dtype="datetime64[ns]").astype("int64")
-                // 1_000
-            )
-            secs = (us // 1_000_000).tolist()
-            nsecs = ((us % 1_000_000) * 1_000).tolist()
-            rows = []
-            it = zip(
-                secs,
-                nsecs,
-                pdf["conv_id"].tolist(),
-                pdf["turn_idx"].tolist(),
-                pdf["role"].tolist(),
-                pdf["text"].tolist(),
-                pdf["tool"].tolist(),
-            )
-            for sec, nsec, conv, ti, role, text, tool in it:
-                if tool is not None and tool != tool:  # pandas NaN
-                    tool = None
-                buf = pack_turn_event(
-                    sec, nsec, conv, int(ti), role, text, tool
-                )
-                decoded = unpack_turn_event(buf)
-                if decoded is None:  # fast decode declined: generic path
-                    decoded = unpack_event(buf)
-                dsec, dnsec, rec = decoded
-                rows.append(
-                    (
-                        rec["conv_id"],
-                        rec["turn_idx"],
-                        rec["role"],
-                        rec["text"],
-                        rec["tool"],
-                        pd.Timestamp((dsec * 1_000_000_000) + dnsec),
-                        len(buf),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "role", "text", "tool",
-                    "ts", "n_bytes",
-                ],
-            )
+    def row(conv, ti, role, text, tool, us):
+        sec, usec = divmod(us, 1_000_000)
+        buf = pack_turn_event(sec, usec * 1_000, conv, ti, role, text, tool)
+        # the fast decode declines any shape it does not recognize
+        dsec, dnsec, rec = unpack_turn_event(buf) or unpack_event(buf)
+        return (
+            rec["conv_id"], rec["turn_idx"], rec["role"], rec["text"],
+            rec["tool"], dsec * 1_000_000 + dnsec // 1_000, len(buf),
+        )
 
-    return df.select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    ).mapInPandas(fn, _OUT_SCHEMA)
+    return _map_rows(df.select(*_TURN_COLS), _OUT_SCHEMA, row)
 
 
 def avro_roundtrip(df: DataFrame) -> DataFrame:
     """transcripts -> Avro binary bytes (zigzag varints, union-index
     nullable tool, µs-epoch long timestamp) -> decoded columns."""
+    names = [name for name, _ in AVRO_TRANSCRIPT_SCHEMA]
 
-    def fn(pdfs: Iterable[pd.DataFrame]):
-        for pdf in pdfs:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                rec = {
-                    "conv_id": r.conv_id,
-                    "turn_idx": int(r.turn_idx),
-                    "role": r.role,
-                    "text": r.text,
-                    "tool": None if r.tool is None else r.tool,
-                    "ts_us": _ts_to_us(r.ts),
-                }
-                buf = avro_encode(rec, AVRO_TRANSCRIPT_SCHEMA)
-                d = avro_decode(buf, AVRO_TRANSCRIPT_SCHEMA)
-                rows.append(
-                    (
-                        d["conv_id"],
-                        d["turn_idx"],
-                        d["role"],
-                        d["text"],
-                        d["tool"],
-                        pd.Timestamp(d["ts_us"] * 1000),
-                        len(buf),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "role", "text", "tool",
-                    "ts", "n_bytes",
-                ],
-            )
+    def row(*values):
+        buf = avro_encode(dict(zip(names, values)), AVRO_TRANSCRIPT_SCHEMA)
+        d = avro_decode(buf, AVRO_TRANSCRIPT_SCHEMA)
+        return (*(d[n] for n in names), len(buf))
 
-    return df.select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    ).mapInPandas(fn, _OUT_SCHEMA)
+    return _map_rows(df.select(*_TURN_COLS), _OUT_SCHEMA, row)
 
 
 _FWD_SCHEMA = (
@@ -170,65 +184,41 @@ def forward_roundtrip(df: DataFrame) -> DataFrame:
     in_forward's fw_prot.c parses — then unpacked back into rows,
     carrying the event count and the exact message wire size.
 
-    Scale shape: `applyInPandas` groups on (tag, conv_id), so a
-    message is conversation-bounded (the shuffle key is the same
-    conv_id salt/repartition key the rest of the pipeline uses) —
-    never one group per tag, which would serialize a whole route at
-    100 TB.
-    """
+    The message is built JVM-side by wire_expr.forward_message_bytes,
+    the same encoder the `forward_wire_jvm` query runs; Python only
+    decodes, one message per row.  Scale shape: the messages group on
+    (tag, conv_id), so a message is conversation-bounded — never one
+    group per tag, which would serialize a whole route at 100 TB."""
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tag, conv = key
-        pdf = pdf.sort_values("turn_idx")
-        events = []
-        for r in pdf.itertuples(index=False):
-            us = _ts_to_us(r.ts)
-            sec, nsec = divmod(us, 1_000_000)
-            events.append(
-                (
-                    sec,
-                    nsec * 1000,
-                    {
-                        "conv_id": r.conv_id,
-                        "turn_idx": int(r.turn_idx),
-                        "role": r.role,
-                        "text": r.text,
-                        "tool": None if r.tool is None else r.tool,
-                    },
-                )
-            )
-        from fluent_bit_spark.functions.wire import (
-            pack_forward_message,
-            unpack_forward_message,
-        )
-
-        buf = pack_forward_message(tag, events)
-        tag2, back = unpack_forward_message(buf)
-        rows = [
+    def decode(buf):
+        tag, back = unpack_forward_message(buf)
+        return [
             (
-                tag2,
-                rec["conv_id"],
-                rec["turn_idx"],
-                rec["role"],
-                rec["text"],
-                rec["tool"],
-                pd.Timestamp(sec * 1_000_000_000 + nsec),
-                len(back),
-                len(buf),
+                tag, rec["conv_id"], rec["turn_idx"], rec["role"],
+                rec["text"], rec["tool"], sec * 1_000_000 + nsec // 1_000,
+                len(back), len(buf),
             )
             for sec, nsec, rec in back
         ]
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "tag", "conv_id", "turn_idx", "role", "text", "tool",
-                "ts", "n_events", "msg_bytes",
-            ],
-        )
 
-    return df.select(
-        "tag", "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    ).groupBy("tag", "conv_id").applyInPandas(fn, _FWD_SCHEMA)
+    messages = forward_message_bytes(df.select("tag", *_TURN_COLS))
+    return _map_rows(messages.select("message"), _FWD_SCHEMA, decode, flat=True)
+
+
+def _kafka_records(rows: list) -> list:
+    """One conversation's Kafka records (ts_ms, key, value): key =
+    conv_id UTF-8, value = the turn's msgpack event bytes."""
+    return [
+        (
+            us // 1_000,
+            conv.encode(),
+            pack_turn_event(
+                us // 1_000_000, us % 1_000_000 * 1_000,
+                conv, ti, role, text, tool,
+            ),
+        )
+        for conv, ti, role, text, tool, us in rows
+    ]
 
 
 _KAFKA_SCHEMA = (
@@ -258,62 +248,22 @@ def kafka_batch_roundtrip(df: DataFrame) -> DataFrame:
     all byte work is Arrow-batched Python, never per-row UDF calls.
     """
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from fluent_bit_spark.functions.wire import (
-            pack_event,
-            pack_kafka_batch,
-            unpack_event,
-            unpack_kafka_batch,
-        )
-
-        (conv,) = key
-        pdf = pdf.sort_values("turn_idx")
-        recs = []
-        for r in pdf.itertuples(index=False):
-            us = _ts_to_us(r.ts)
-            sec, nsec = divmod(us, 1_000_000)
-            val = pack_event(
-                sec,
-                nsec * 1000,
-                {
-                    "conv_id": r.conv_id,
-                    "turn_idx": int(r.turn_idx),
-                    "role": r.role,
-                    "text": r.text,
-                    "tool": None if r.tool is None else r.tool,
-                },
-            )
-            recs.append((us // 1000, conv.encode(), val))
+    def group(rows):
+        conv = rows[0][0]
+        recs = _kafka_records(rows)
         buf = pack_kafka_batch(recs)
         back, crc_ok = unpack_kafka_batch(buf)
         if back != recs:
             raise ValueError(f"kafka batch roundtrip mismatch for {conv}")
         for _ts_ms, _key, val in back:
-            _sec, _nsec, rec = unpack_event(val)
-            if rec["conv_id"] != conv:
+            if unpack_event(val)[2]["conv_id"] != conv:
                 raise ValueError("record value decode mismatch")
-        return pd.DataFrame(
-            [
-                (
-                    conv,
-                    len(recs),
-                    len(buf),
-                    recs[0][0],
-                    max(r[0] for r in recs),
-                    crc_ok,
-                )
-            ],
-            columns=[
-                "conv_id", "n_records", "batch_bytes",
-                "base_ts_ms", "max_ts_ms", "crc_ok",
-            ],
+        return (
+            conv, len(recs), len(buf), recs[0][0],
+            max(r[0] for r in recs), crc_ok,
         )
 
-    return (
-        df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-        .groupBy("conv_id")
-        .applyInPandas(fn, _KAFKA_SCHEMA)
-    )
+    return _per_conversation(df, _KAFKA_SCHEMA, group)
 
 
 _MQTT_SCHEMA = (
@@ -333,45 +283,19 @@ def mqtt_roundtrip(df: DataFrame) -> DataFrame:
 
     Scale shape: per-record codec work, Arrow-batched mapInPandas,
     shuffle-free."""
-    from fluent_bit_spark.functions.wire import (
-        pack_mqtt_publish,
-        unpack_mqtt_publish,
-    )
 
-    def fn(pdfs: Iterable[pd.DataFrame]):
-        for pdf in pdfs:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                qos = int(r.turn_idx) % 3
-                buf = pack_mqtt_publish(
-                    f"fbs/{r.conv_id}",
-                    ("" if r.text is None else r.text).encode("utf-8"),
-                    qos=qos,
-                    packet_id=(int(r.turn_idx) % 65536) if qos else 0,
-                )
-                dq, topic, pid, payload = unpack_mqtt_publish(buf)
-                rows.append(
-                    (
-                        r.conv_id,
-                        int(r.turn_idx),
-                        dq,
-                        topic,
-                        pid,
-                        payload.decode("utf-8"),
-                        len(buf),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "qos", "topic",
-                    "packet_id", "payload", "n_bytes",
-                ],
-            )
+    def row(conv, ti, text):
+        qos = ti % 3
+        buf = pack_mqtt_publish(
+            f"fbs/{conv}",
+            ("" if text is None else text).encode("utf-8"),
+            qos=qos,
+            packet_id=(ti % 65536) if qos else 0,
+        )
+        dq, topic, pid, payload = unpack_mqtt_publish(buf)
+        return (conv, ti, dq, topic, pid, payload.decode("utf-8"), len(buf))
 
-    return df.select("conv_id", "turn_idx", "text").mapInPandas(
-        fn, _MQTT_SCHEMA
-    )
+    return _map_rows(df.select("conv_id", "turn_idx", "text"), _MQTT_SCHEMA, row)
 
 
 _COLLECTD_SCHEMA = (
@@ -389,53 +313,25 @@ def collectd_roundtrip(df: DataFrame) -> DataFrame:
     presence-conditional packing at netprot.c:150-178), one gauge
     value = the text length — then decoded back with the exact packet
     size for the closed-form size oracle."""
-    from fluent_bit_spark.functions.wire import (
-        DS_GAUGE,
-        pack_collectd,
-        unpack_collectd,
-    )
 
-    def fn(pdfs: Iterable[pd.DataFrame]):
-        for pdf in pdfs:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                text = "" if r.text is None else r.text
-                buf = pack_collectd(
-                    host=r.conv_id,
-                    plugin="transcript",
-                    plugin_instance=r.role,
-                    type_="gauge",
-                    type_instance=None if r.tool is None else r.tool,
-                    time_sec=_ts_to_us(r.ts) // 1_000_000,
-                    values=[(DS_GAUGE, float(len(text)))],
-                )
-                h = unpack_collectd(buf)
-                rows.append(
-                    (
-                        r.conv_id,
-                        int(r.turn_idx),
-                        h["host"],
-                        h["plugin"],
-                        h["plugin_instance"],
-                        h["type"],
-                        h.get("type_instance"),
-                        h["time_sec"],
-                        h["values"][0][1],
-                        len(buf),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "host", "plugin",
-                    "plugin_instance", "type", "type_instance",
-                    "time_sec", "text_len", "n_bytes",
-                ],
-            )
+    def row(conv, ti, role, text, tool, us):
+        buf = pack_collectd(
+            host=conv,
+            plugin="transcript",
+            plugin_instance=role,
+            type_="gauge",
+            type_instance=tool,
+            time_sec=us // 1_000_000,
+            values=[(DS_GAUGE, float(len("" if text is None else text)))],
+        )
+        h = unpack_collectd(buf)
+        return (
+            conv, ti, h["host"], h["plugin"], h["plugin_instance"],
+            h["type"], h.get("type_instance"), h["time_sec"],
+            h["values"][0][1], len(buf),
+        )
 
-    return df.select("conv_id", "turn_idx", "role", "text", "tool", "ts").mapInPandas(
-        fn, _COLLECTD_SCHEMA
-    )
+    return _map_rows(df.select(*_TURN_COLS), _COLLECTD_SCHEMA, row)
 
 
 _HTTP_SCHEMA = (
@@ -444,45 +340,24 @@ _HTTP_SCHEMA = (
 )
 
 
-def http_chunked_roundtrip(df: DataFrame, chunk_size: int = 48) -> DataFrame:
+def http_chunked_roundtrip(df: DataFrame) -> DataFrame:
     """HTTP/1.1 chunked transfer framing parity
     (src/flb_http_client.c:258 process_chunked_data): each turn's text
-    is chunk-encoded at `chunk_size` bytes and decoded back, carrying
-    the chunk count and the exact on-wire size — the oracle re-derives
-    both closed-form from the payload byte length (hex-header widths
-    included). Arrow-batched map stage, shuffle-free."""
-    from fluent_bit_spark.functions.wire import (
-        http_chunked_decode,
-        http_chunked_encode,
-    )
+    is chunk-encoded at HTTP_CHUNK_SIZE bytes and decoded back,
+    carrying the chunk count and the exact on-wire size — the oracle
+    re-derives both closed-form from the payload byte length
+    (hex-header widths included). Arrow-batched map stage,
+    shuffle-free."""
 
-    def fn(pdfs: Iterable[pd.DataFrame]):
-        for pdf in pdfs:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                payload = ("" if r.text is None else r.text).encode("utf-8")
-                buf = http_chunked_encode(payload, chunk_size)
-                dec = http_chunked_decode(buf)
-                n_chunks = -(-len(payload) // chunk_size)
-                rows.append(
-                    (
-                        r.conv_id,
-                        int(r.turn_idx),
-                        dec.decode("utf-8"),
-                        n_chunks,
-                        len(buf),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "payload", "n_chunks", "n_bytes",
-                ],
-            )
+    def row(conv, ti, text):
+        payload = ("" if text is None else text).encode("utf-8")
+        buf = http_chunked_encode(payload, HTTP_CHUNK_SIZE)
+        return (
+            conv, ti, http_chunked_decode(buf).decode("utf-8"),
+            -(-len(payload) // HTTP_CHUNK_SIZE), len(buf),
+        )
 
-    return df.select("conv_id", "turn_idx", "text").mapInPandas(
-        fn, _HTTP_SCHEMA
-    )
+    return _map_rows(df.select("conv_id", "turn_idx", "text"), _HTTP_SCHEMA, row)
 
 
 _WS_SCHEMA = (
@@ -506,36 +381,19 @@ def websocket_roundtrip(df: DataFrame) -> DataFrame:
 
     Scale shape: per-record codec work, Arrow-batched mapInPandas,
     shuffle-free."""
-    from fluent_bit_spark.functions.wire import pack_ws_frame, unpack_ws_frame
 
-    def fn(pdfs: Iterable[pd.DataFrame]):
-        for pdf in pdfs:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                rep = 1 + (int(r.turn_idx) % 3) * 8
-                payload = (("" if r.text is None else r.text) * rep).encode("utf-8")
-                buf = pack_ws_frame(payload)
-                head_len = 6 if len(payload) < 126 else 8 if len(payload) < 65536 else 14
-                _, out, consumed = unpack_ws_frame(buf)
-                rows.append(
-                    (
-                        r.conv_id,
-                        int(r.turn_idx),
-                        len(payload),
-                        buf[:head_len].hex(),
-                        len(buf),
-                        out == payload and consumed == len(buf),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "payload_bytes", "header_hex",
-                    "n_bytes", "ok",
-                ],
-            )
+    def row(conv, ti, text):
+        rep = 1 + (ti % 3) * 8
+        payload = (("" if text is None else text) * rep).encode("utf-8")
+        buf = pack_ws_frame(payload)
+        head_len = 6 if len(payload) < 126 else 8 if len(payload) < 65536 else 14
+        _, out, consumed = unpack_ws_frame(buf)
+        return (
+            conv, ti, len(payload), buf[:head_len].hex(), len(buf),
+            out == payload and consumed == len(buf),
+        )
 
-    return df.select("conv_id", "turn_idx", "text").mapInPandas(fn, _WS_SCHEMA)
+    return _map_rows(df.select("conv_id", "turn_idx", "text"), _WS_SCHEMA, row)
 
 
 _TD_SCHEMA = "conv_id string, n_records long, mp_bytes long, gz_ok boolean"
@@ -555,44 +413,28 @@ def td_roundtrip(df: DataFrame) -> DataFrame:
 
     Scale shape: one shuffle on conv_id (applyInPandas group =
     conversation-bounded state), codec work Arrow-batched."""
-    import gzip as _gzip
 
-    from fluent_bit_spark.functions.wire import msgpack_unpack, pack_td_record
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx")
-        recs = []
-        for r in pdf.itertuples(index=False):
-            recs.append(
-                {
-                    "time": _ts_to_us(r.ts) // 1_000_000,
-                    "conv_id": r.conv_id,
-                    "turn_idx": int(r.turn_idx),
-                    "role": r.role,
-                    "text": r.text,
-                    "tool": None if r.tool is None else r.tool,
-                }
-            )
+    def group(rows):
+        recs = [
+            {
+                "time": us // 1_000_000, "conv_id": conv, "turn_idx": ti,
+                "role": role, "text": text, "tool": tool,
+            }
+            for conv, ti, role, text, tool, us in rows
+        ]
         # fast-path encode; the decode walk below stays on the generic
         # decoder, so every run cross-verifies the specialized encoder
         stream = b"".join(pack_td_record(*m.values()) for m in recs)
-        body = _gzip.compress(stream, mtime=0)
+        body = gzip.compress(stream, mtime=0)
         # decode back: gunzip, walk the concatenated maps
-        out, pos, back = _gzip.decompress(body), 0, []
+        out, pos, back = gzip.decompress(body), 0, []
         while pos < len(out):
             m, pos = msgpack_unpack(out, pos)
             back.append(m)
         ok = back == recs and pos == len(stream)
-        return pd.DataFrame(
-            [(pdf.iloc[0].conv_id, len(recs), len(stream), ok)],
-            columns=["conv_id", "n_records", "mp_bytes", "gz_ok"],
-        )
+        return (rows[0][0], len(recs), len(stream), ok)
 
-    return (
-        df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-        .groupBy("conv_id")
-        .applyInPandas(fn, _TD_SCHEMA)
-    )
+    return _per_conversation(df, _TD_SCHEMA, group)
 
 
 _KPRODUCE_SCHEMA = (
@@ -618,32 +460,9 @@ def kafka_produce_roundtrip(df: DataFrame) -> DataFrame:
     Scale shape: same conv_id applyInPandas pass as the batch
     roundtrip — one co-partitioned shuffle, Arrow-batched bytes."""
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from fluent_bit_spark.functions.wire import (
-            pack_event,
-            pack_kafka_batch,
-            pack_kafka_produce_request,
-            unpack_kafka_batch,
-            unpack_kafka_produce_request,
-        )
-
-        (conv,) = key
-        pdf = pdf.sort_values("turn_idx")
-        recs = []
-        for r in pdf.itertuples(index=False):
-            us = _ts_to_us(r.ts)
-            sec, nsec = divmod(us, 1_000_000)
-            val = pack_event(
-                sec, nsec * 1000,
-                {
-                    "conv_id": r.conv_id,
-                    "turn_idx": int(r.turn_idx),
-                    "role": r.role,
-                    "text": r.text,
-                    "tool": None if r.tool is None else r.tool,
-                },
-            )
-            recs.append((us // 1000, conv.encode(), val))
+    def group(rows):
+        conv = rows[0][0]
+        recs = _kafka_records(rows)
         batch = pack_kafka_batch(recs)
         req = pack_kafka_produce_request(
             "fluent-bit", "fbs.transcripts", 0, batch,
@@ -657,15 +476,9 @@ def kafka_produce_roundtrip(df: DataFrame) -> DataFrame:
         back, crc_ok = unpack_kafka_batch(h["record_set"])
         if back != recs:
             raise ValueError(f"inner batch mismatch for {conv}")
-        return pd.DataFrame(
-            [(conv, len(recs), len(batch), len(req), h["api_key"],
-              h["correlation_id"], crc_ok)],
-            columns=["conv_id", "n_records", "batch_bytes", "request_bytes",
-                     "api_key", "correlation_id", "crc_ok"],
+        return (
+            conv, len(recs), len(batch), len(req), h["api_key"],
+            h["correlation_id"], crc_ok,
         )
 
-    return (
-        df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-        .groupBy("conv_id")
-        .applyInPandas(fn, _KPRODUCE_SCHEMA)
-    )
+    return _per_conversation(df, _KPRODUCE_SCHEMA, group)

@@ -3534,10 +3534,10 @@ SELECT conv_id, CAST(COUNT(*) AS BIGINT) AS n_records,
        CAST(SUM(esz) AS BIGINT) AS mp_bytes, TRUE AS gz_ok
 FROM td1 GROUP BY conv_id"""
 
-    # JVM-expression encoders (functions/wire_expr.py): per-row exact
-    # wire sizes of the [EventTime, 5-key map] msgpack entry and the
-    # Avro binary record — the encode sides re-derived with zero
-    # Python in the Spark plan; same closed forms as the roundtrips'
+    # per-row exact wire sizes of the [EventTime, 5-key map] msgpack
+    # entry (JVM encoder, functions/wire_expr.py) and the Avro binary
+    # record (the avro_roundtrip codec, projected); same closed forms
+    # as the roundtrips'
     msgpack_jvm = f"""
 SELECT conv_id, turn_idx, CAST({esz} AS BIGINT) AS n_bytes
 FROM transcripts"""

@@ -262,6 +262,65 @@ class TestForwardProtocol:
         # single-event message is strictly smaller than the pair
         assert by_tag["t.b"][0]["msg_bytes"] < a[0]["msg_bytes"]
 
+    def test_forward_roundtrip_plan_packs_jvm_side(self, spark):
+        """The Forward message is packed by the Catalyst encoder: no
+        grouped-pandas packer, and the one Python node is the decode."""
+        from pyspark.sql import functions as F
+        from fluent_bit_spark.operators.wireformat import forward_roundtrip
+
+        df = spark.createDataFrame(
+            [("t.a", "c1", 1, "user", "hi", None, "2024-01-01 00:00:00")],
+            "tag string, conv_id string, turn_idx int, role string, "
+            "text string, tool string, ts string",
+        ).withColumn("ts", F.to_timestamp("ts"))
+        plan = forward_roundtrip(df)._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" not in plan, plan
+        python_nodes = [
+            line for line in plan.splitlines()
+            if "Python" in line or "Pandas" in line
+        ]
+        assert len(python_nodes) == 1, plan
+        assert "MapInPandas" in python_nodes[0], plan
+
+
+class TestEventTimeRange:
+    """A timestamp the EventTime u32 seconds field cannot hold fails
+    loudly on every msgpack encoder instead of emitting wrong bytes."""
+
+    @pytest.mark.parametrize("ansi", ["true", "false"])
+    @pytest.mark.parametrize(
+        "ts", ["1969-12-31 23:59:59", "2106-02-07 06:28:16"]
+    )
+    def test_out_of_range_ts_raises(self, spark, monkeypatch, ansi, ts):
+        import __spark_entry__ as entry
+        from pyspark.sql import functions as F
+        from fluent_bit_spark.operators.wireformat import msgpack_roundtrip
+
+        routed = spark.createDataFrame(
+            [
+                ("t", "c1", 1, "user", "ok", None, "2024-01-01 00:00:00"),
+                ("t", "c1", 2, "user", "bad", None, ts),
+            ],
+            "tag string, conv_id string, turn_idx int, role string, "
+            "text string, tool string, ts string",
+        ).withColumn("ts", F.to_timestamp("ts"))
+        transcripts = routed.drop("tag")
+        monkeypatch.setattr(entry, "_routed", lambda spark, sf_dir: routed)
+        monkeypatch.setattr(
+            entry, "_transcripts", lambda spark, sf_dir: transcripts
+        )
+        prev = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        try:
+            for query in (entry._q_msgpack_wire_jvm, entry._q_forward_roundtrip):
+                with pytest.raises(Exception, match="EventTime sec"):
+                    query(spark, None).collect()
+            # the Python packer refuses the same row
+            with pytest.raises(Exception):
+                msgpack_roundtrip(transcripts).collect()
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", prev)
+
 
 class TestGelfChunking:
     def test_header_layout_and_reassembly(self):
@@ -810,112 +869,23 @@ class TestJvmExprEncoder:
         assert "Python" not in plan and "Pandas" not in plan, plan
 
 
-class TestJvmAvroEncoder:
-    """wire_expr avro encoder: byte-identical to wire.avro_encode over
-    varint byte-count boundaries (both signs), multibyte utf8, the
-    nullable union, and the corpus."""
-
-    # values straddling every 7-bit varint width boundary, both signs
-    VARINT_BOUNDARY_INTS = sorted(
-        {0, 1, -1}
-        | {s * (2 ** k + d) for k in (6, 13, 20, 27, 34, 41, 48, 55, 61)
-           for d in (-1, 0, 1) for s in (1, -1)}
-    )
-
-    def test_varint_boundaries_byte_identical(self, spark):
-        from fluent_bit_spark.functions.wire import _zigzag
-        from fluent_bit_spark.functions.wire_expr import zigzag_varint_expr
-        from pyspark.sql import functions as F
-
-        df = spark.createDataFrame(
-            [(v,) for v in self.VARINT_BOUNDARY_INTS], "v long"
-        )
-        got = df.select(
-            "v", zigzag_varint_expr(F.col("v")).alias("wire")
-        ).collect()
-        for r in got:
-            assert bytes(r["wire"]) == _zigzag(r["v"]), r["v"]
-
-    def test_record_byte_identical(self, spark):
-        from fluent_bit_spark.functions.wire import avro_encode
-        from fluent_bit_spark.functions.wire_expr import avro_turn_record_expr
-        from fluent_bit_spark.operators.wireformat import AVRO_TRANSCRIPT_SCHEMA
-        from pyspark.sql import functions as F
-
-        rows = [
-            ("c1", 0, "user", "", None, 0),
-            ("", 127, "assistant", "é" * 40, "bash", 1_700_000_000_123_456),
-            ("x" * 300, -1, "tool", "日本語 \U0001f389", "a" * 200, 63),
-            ("conv", 2**31, "system", "plain", None, 2**55 + 1),
-        ]
-        df = spark.createDataFrame(
-            rows, "conv_id string, turn_idx long, role string, "
-                  "text string, tool string, ts_us long"
-        )
-        got = df.select(
-            avro_turn_record_expr(
-                F.col("conv_id"), F.col("turn_idx"), F.col("role"),
-                F.col("text"), F.col("tool"), F.col("ts_us"),
-            ).alias("wire"),
-            "*",
-        ).collect()
-        for r in got:
-            rec = {
-                "conv_id": r["conv_id"], "turn_idx": r["turn_idx"],
-                "role": r["role"], "text": r["text"], "tool": r["tool"],
-                "ts_us": r["ts_us"],
-            }
-            py = avro_encode(rec, AVRO_TRANSCRIPT_SCHEMA)
-            assert bytes(r["wire"]) == py, rec
-
-    def test_corpus_byte_identical_plan_python_free(self, spark, sf_dir):
-        from fluent_bit_spark.functions.wire import avro_encode
-        from fluent_bit_spark.functions.wire_expr import avro_turn_bytes
-        from fluent_bit_spark.operators.wireformat import AVRO_TRANSCRIPT_SCHEMA
-        from fluent_bit_spark.transcripts import load_transcripts
-        import calendar
-
-        t = load_transcripts(spark, sf_dir)
-        out_df = avro_turn_bytes(t.withColumn("ts", t["ts"].cast("timestamp")))
-        plan = out_df._jdf.queryExecution().executedPlan().toString()
-        assert "Python" not in plan and "Pandas" not in plan, plan
-        for r in out_df.collect():
-            naive = r["ts"].replace(tzinfo=None)
-            usec = (
-                calendar.timegm(naive.timetuple()) * 1_000_000
-                + naive.microsecond
-            )
-            rec = {
-                "conv_id": r["conv_id"], "turn_idx": r["turn_idx"],
-                "role": r["role"], "text": r["text"], "tool": r["tool"],
-                "ts_us": usec,
-            }
-            py = avro_encode(rec, AVRO_TRANSCRIPT_SCHEMA)
-            assert bytes(r["wire"]) == py
-            assert r["n_bytes"] == len(py)
-
-
 class TestJvmForwardFraming:
     """wire_expr.forward_message_bytes: the Forward-mode message per
     (tag, conv_id) must be byte-identical to wire.pack_forward_message
-    over the corpus, with a Python-free plan."""
+    over events ordered by (turn_idx, ts, event bytes), with a
+    Python-free plan."""
 
-    def test_corpus_messages_byte_identical(self, spark, sf_dir):
+    @staticmethod
+    def _python_messages(rows) -> dict:
+        """(tag, conv_id) -> wire.pack_forward_message bytes, events
+        sorted as forward_message_bytes documents."""
         import calendar
 
-        from fluent_bit_spark.functions.wire import pack_forward_message
-        from fluent_bit_spark.functions.wire_expr import forward_message_bytes
-        from fluent_bit_spark.transcripts import load_transcripts
-        from pyspark.sql import functions as F
+        from fluent_bit_spark.functions.wire import (
+            pack_forward_message,
+            pack_turn_event,
+        )
 
-        t = load_transcripts(spark, sf_dir).withColumn(
-            "tag", F.concat(F.lit("fbs."), F.col("role"))
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        out_df = forward_message_bytes(t)
-        plan = out_df._jdf.queryExecution().executedPlan().toString()
-        assert "Python" not in plan and "Pandas" not in plan, plan
-
-        rows = t.collect()
         groups: dict = {}
         for r in rows:
             naive = r["ts"].replace(tzinfo=None)
@@ -923,31 +893,75 @@ class TestJvmForwardFraming:
                 calendar.timegm(naive.timetuple()) * 1_000_000
                 + naive.microsecond
             )
+            sec, nsec = us // 1_000_000, (us % 1_000_000) * 1_000
+            rec = {
+                "conv_id": r["conv_id"],
+                "turn_idx": r["turn_idx"],
+                "role": r["role"],
+                "text": r["text"],
+                "tool": r["tool"],
+            }
+            key = (r["turn_idx"], us, pack_turn_event(sec, nsec, *rec.values()))
             groups.setdefault((r["tag"], r["conv_id"]), []).append(
-                (
-                    r["turn_idx"],
-                    (
-                        us // 1_000_000,
-                        (us % 1_000_000) * 1_000,
-                        {
-                            "conv_id": r["conv_id"],
-                            "turn_idx": r["turn_idx"],
-                            "role": r["role"],
-                            "text": r["text"],
-                            "tool": r["tool"],
-                        },
-                    ),
-                )
+                (key, (sec, nsec, rec))
             )
+        return {
+            g: pack_forward_message(g[0], [e for _, e in sorted(evs)])
+            for g, evs in groups.items()
+        }
+
+    def _assert_identical(self, t):
+        from fluent_bit_spark.functions.wire_expr import forward_message_bytes
+
+        out_df = forward_message_bytes(t)
+        plan = out_df._jdf.queryExecution().executedPlan().toString()
+        assert "Python" not in plan and "Pandas" not in plan, plan
+        want = self._python_messages(t.collect())
         got = {(r["tag"], r["conv_id"]): r for r in out_df.collect()}
-        assert set(got) == set(groups)
-        for key, evs in groups.items():
-            evs = [e for _, e in sorted(evs, key=lambda p: p[0])]
-            py = pack_forward_message(key[0], evs)
+        assert set(got) == set(want)
+        for key, py in want.items():
             r = got[key]
             assert bytes(r["message"]) == py, key
             assert r["msg_bytes"] == len(py)
-            assert r["n_events"] == len(evs)
+
+    def test_corpus_messages_byte_identical(self, spark, sf_dir):
+        from fluent_bit_spark.transcripts import load_transcripts
+        from pyspark.sql import functions as F
+
+        t = load_transcripts(spark, sf_dir).withColumn(
+            "tag", F.concat(F.lit("fbs."), F.col("role"))
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        self._assert_identical(t)
+
+    def test_duplicate_turn_idx_orders_by_ts(self, spark):
+        """Duplicate turn_idx inside one message: the tie breaks on ts
+        (then on the event bytes), not on arrival order."""
+        from pyspark.sql import functions as F
+
+        rows = [
+            ("t", "c1", 2, "user", "nn", None, "2024-01-01 00:00:09"),
+            ("t", "c1", 2, "user", "zz", None, "2024-01-01 00:00:01"),
+            ("t", "c1", 1, "user", "first", None, "2024-01-01 00:00:05"),
+            ("t", "c1", 2, "user", "mm", "bash", "2024-01-01 00:00:01"),
+            ("t", "c1", 2, "user", "aa", None, "2024-01-01 00:00:01"),
+            ("t", "c2", 7, "tool", "other", None, "2024-01-01 00:00:01"),
+        ]
+        t = spark.createDataFrame(
+            rows,
+            "tag string, conv_id string, turn_idx int, role string, "
+            "text string, tool string, ts string",
+        ).withColumn("ts", F.to_timestamp("ts"))
+        self._assert_identical(t)
+        from fluent_bit_spark.functions.wire import unpack_forward_message
+        from fluent_bit_spark.functions.wire_expr import forward_message_bytes
+
+        [r] = forward_message_bytes(t.where("conv_id = 'c1'")).collect()
+        _, back = unpack_forward_message(bytes(r["message"]))
+        # turn_idx first, then ts ("nn" is last although its bytes
+        # sort before "zz"), then the three 00:00:01 turns by bytes
+        assert [rec["text"] for _, _, rec in back] == [
+            "first", "aa", "mm", "zz", "nn",
+        ]
 
 
 class TestJvmMqttEncoder:
